@@ -11,16 +11,16 @@ import org.apache.spark.sql.SparkSession
   * session-global conf around a scoped region and restore it in `finally`
   * — `spark.sql.shuffle.partitions` in the iterative graph loops
   * (Dedup.dupClusters, Graphs.pageRank) and the streaming gate starts
-  * (EventStreams.runToParquet), `partitionOverwriteMode` in CleanStore's
-  * refresh — and Sql.queries swaps the `lineitem` temp view at
-  * analysis time for sql9. These are safe because queries run STRICTLY
-  * SEQUENTIALLY within a session (the Bench/Verify/test contract). A
-  * future concurrent client must NOT share one session with these
-  * operators: a query planned inside another query's flip window would
-  * inherit graph-scale partitioning or the swapped view. The concurrent
-  * posture is one cloned session per client (`spark.newSession()` shares
-  * the context but isolates conf + temp views), or replacing the flips
-  * with hint-based repartitioning where Spark grows the API for it.
+  * (EventStreams.runToParquet) — and Sql.queries swaps the `lineitem`
+  * temp view at analysis time for sql9. These are safe because queries
+  * run STRICTLY SEQUENTIALLY within a session (the Bench/Verify/test
+  * contract). A future concurrent client must NOT share one session with
+  * these operators: a query planned inside another query's flip window
+  * would inherit graph-scale partitioning or the swapped view. The
+  * concurrent posture is one cloned session per client
+  * (`spark.newSession()` shares the context but isolates conf + temp
+  * views), or replacing the flips with hint-based repartitioning where
+  * Spark grows the API for it.
   */
 object GraftSession {
   def build(cpus: String): SparkSession = {
@@ -49,6 +49,25 @@ object GraftSession {
       // PartitionFilters changes. Untruncated metadata makes the scrub
       // purely structural. Display-only conf: no plan/behavior change.
       .config("spark.sql.maxMetadataStringLength", "100000")
+      // The local file system without a process spawn per file. Without
+      // the native-hadoop library (the Spark distribution does not ship
+      // it: "Unable to load native-hadoop library"), the stock local FS
+      // sets the mode of every file it creates (each parquet part and its
+      // .crc) and every directory it makes by forking `chmod` — over a
+      // thousand forks for one 365-date partitioned write, most of that
+      // write's wall. The graft.sources.NoFork* classes set the same mode
+      // bits in-process; one binding per Hadoop API: FileSystem (writers,
+      // listings) and FileContext (streaming checkpoints, state-store
+      // files).
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NoForkLocalFs].getName)
+      // Listing a partitioned table of more than 32 directories (the
+      // discovery threshold) is a Spark job of min(dirs, this) tasks; the
+      // default 10000 made reading a 365-date store a 365-task job of ~2 s
+      // stage wall, nearly all of it task scheduling. One task per core,
+      // the shuffle-partitions rule.
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cpus)
     // Streaming keyed state defaults to the HDFS-backed IN-MEMORY store —
     // executor-heap-bound, which at 100 TB keyed state (sessionization,
     // stream-stream joins, MV maintenance) is the wrong bound. The

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -61,16 +61,23 @@ object CleanStore {
   def derivedLineitem(spark: SparkSession, sfDir: String): DataFrame =
     deriveCleaned(Cleaning.clean(Tables.lineitem(spark, sfDir), Analytics.cleaningRules))
 
-  /** Date-partitioned parquet write. The `repartition` on the partition
-    * column lands all rows of a date in ONE writer task → one file per
-    * date; without it every task opens a file per date it sees (tasks ×
-    * dates tiny files). At 100 TB over ~7 years that is ~2.5k partitions
-    * of ~40 GB — the right pruning granularity.
+  /** Date-partitioned parquet write. The hash `repartition` on the
+    * partition column lands all rows of a date in ONE writer task → one
+    * file per date; without it every task opens a file per date it sees
+    * (tasks × dates tiny files). The shuffle has an explicit width, the
+    * session's shuffle partitions (one per core): without one AQE
+    * coalesces a small input down to a single task that writes every
+    * date's file alone (365 files from one task on a 40k-row year). At
+    * 100 TB over ~7 years that is ~2.5k partitions of ~40 GB — the right
+    * pruning granularity.
     */
   def writePartitioned(df: DataFrame, tsCol: String, partCol: String, path: String): Unit =
-    df.withColumn(partCol, to_date(col(tsCol)))
-      .repartition(col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(path)
+    dateWriter(df.withColumn(partCol, to_date(col(tsCol))), partCol).parquet(path)
+
+  private def dateWriter(dated: DataFrame, partCol: String): DataFrameWriter[Row] =
+    dated.repartition(
+        dated.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(partCol))
+      .write.mode("overwrite").partitionBy(partCol)
 
   def writeEvents(df: DataFrame, path: String): Unit =
     writePartitioned(df, "ts", "event_date", path)
@@ -187,21 +194,12 @@ object CleanStore {
         val recorded = readFingerprints(fpFile)
         val changed = current.keySet.filter(d => !recorded.get(d).contains(current(d)))
         val removed = recorded.keySet -- current.keySet
-        if (changed.nonEmpty) {
-          // dynamic mode: only the partitions present in the written data
-          // are replaced — untouched dates keep their existing files
-          val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try {
-            built.withColumn(partCol, to_date(col(tsCol)))
-              .filter(col(partCol).cast("string").isin(changed.toSeq: _*))
-              .repartition(col(partCol))
-              .write.mode("overwrite").partitionBy(partCol).parquet(dir)
-          } finally prev match {
-            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
-        }
+        // dynamic mode: only the partitions present in the written data
+        // are replaced — untouched dates keep their existing files
+        if (changed.nonEmpty)
+          dateWriter(built.withColumn(partCol, to_date(col(tsCol)))
+              .filter(col(partCol).cast("string").isin(changed.toSeq: _*)), partCol)
+            .option("partitionOverwriteMode", "dynamic").parquet(dir)
         removed.foreach(d =>
           graft.sources.Staging.deleteRecursively(new java.io.File(dir, s"$partCol=$d")))
         writeFingerprints(fpFile, current)

@@ -184,16 +184,10 @@ object MaterializedView {
             .getOrElse(spark.createDataFrame(
               new java.util.ArrayList[org.apache.spark.sql.Row](), fullSchema))
           val merged = merge(existing)
-          val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try merged
+          merged
             .repartition(col(partCol))
-            .write.mode("overwrite").partitionBy(partCol)
-            .parquet(dataDir.getAbsolutePath)
-          finally prev match {
-            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partCol).parquet(dataDir.getAbsolutePath)
           // COMMIT: one atomic state flip, then post-commit cleanup
           writeState(root, s"applied $batchId")
           baks.foreach { case (_, bak) => graft.sources.Staging.deleteRecursively(bak) }

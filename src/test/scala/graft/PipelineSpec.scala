@@ -39,6 +39,14 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       .listFiles().filter(_.getName.startsWith("ship_date="))
     assert(partDirs.length > 100, s"expected daily partition dirs, got ${partDirs.length}")
 
+    // one writer task per date: every date directory of both stores holds
+    // exactly one part file (CleanStore.writePartitioned's contract)
+    for ((table, prefix) <- Seq(res.cleanPath -> "ship_date=", s"$out/clean_events" -> "event_date=");
+         d <- new java.io.File(table).listFiles() if d.getName.startsWith(prefix)) {
+      val parts = d.listFiles().count(_.getName.startsWith("part-"))
+      assert(parts === 1, s"$d holds $parts part files")
+    }
+
     // ... so the dashboard's F1 date filter becomes partition PRUNING:
     // the scan must select only the matching partitions, not all of them
     val filtered = clean.filter(
